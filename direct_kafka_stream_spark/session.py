@@ -34,6 +34,21 @@ _RUNTIME_CONF = {
     # Spark 4 refuses parquet TIMESTAMP(NANOS) outright; read the raw
     # int64 nanos as LongType and convert in the loader (io.py).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Streaming checkpoints (offset WAL, commit log, source/sink
+    # metadata logs, state-store deltas) write a temp file and rename
+    # it. Spark's default FileContext manager stats both ends of each
+    # rename; without the native Hadoop library every such stat on the
+    # local FS forks a `readlink` process — 3,485 forks in a 36-batch
+    # ingest→dedup→commit run, ~97 per micro-batch across the state-store
+    # tasks and the driver's offset, commit, source and sink-metadata
+    # logs. This manager renames with FileSystem.rename (File.renameTo
+    # locally, no fork): 5 forks per run. The one-writer-per-batch guard
+    # is the same check under both: with overwrite off each tests that
+    # the destination exists and throws before renaming.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 

@@ -11,6 +11,15 @@ batches. Where the reference was deliberately at-least-once (it stored
 idempotent sinks here give exactly-once; ``dedup_streaming`` in
 transforms.py is the in-engine version of "dedupe downstream" for
 sources that are themselves at-least-once.
+
+Every checkpoint file (offset WAL, commit log, source/sink metadata
+logs, state-store deltas) is written through the checkpoint manager
+that ``session._RUNTIME_CONF`` selects: Spark's FileSystem-based one,
+which renames without the forked stat calls the default FileContext
+manager makes on a local FS lacking the native Hadoop library, and
+keeps the same exists-then-throw guard that lets only one writer land
+each batch's log entry. Checkpoints the default manager wrote resume
+unchanged: both write the same files.
 """
 
 from __future__ import annotations

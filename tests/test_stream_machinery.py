@@ -18,6 +18,8 @@ import pytest
 
 from tests.conftest import SF_DIR
 
+_CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
 
 def test_stream_pyds_write_two_phase_commit(spark, tmp_path):
     """End-to-end through the registry entry, then inspect the sink
@@ -471,7 +473,12 @@ def test_restarted_stream_ledger_and_state_stay_consistent(spark, tmp_path):
     equals the batch aggregate of A∪B (state carried across the
     restart), and time-traveled batch-0 state equals A alone. This is
     the reference's restart-recovery acceptance narrative (reference
-    README.md:160-176) with the audit the reference never had."""
+    README.md:160-176) with the audit the reference never had.
+
+    Run twice: once with both phases under the engine session, once
+    with phase A under Spark's default FileContext checkpoint manager
+    (the conf unset), i.e. a checkpoint written before the engine
+    chose the FileSystem-based manager, resumed by the engine."""
     import pandas as pd
 
     from direct_kafka_stream_spark.operators.analytics38 import (
@@ -483,14 +490,13 @@ def test_restarted_stream_ledger_and_state_stay_consistent(spark, tmp_path):
     from direct_kafka_stream_spark.sources.files import file_stream
     from pyspark.sql import functions as F
 
-    src = tmp_path / "src"
-    src.mkdir()
-    ckpt = f"{tmp_path}/ckpt"
+    spark_default_manager = spark.newSession()
+    spark_default_manager.conf.unset(_CHECKPOINT_MANAGER_CONF)
     schema = "k string, v long"
 
-    def run_once():
+    def run_once(session, src, ckpt):
         agg = (
-            file_stream(spark, str(src), schema)
+            file_stream(session, str(src), schema)
             .groupBy("k")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
         )
@@ -498,19 +504,7 @@ def test_restarted_stream_ledger_and_state_stay_consistent(spark, tmp_path):
             agg.writeStream.format("noop").outputMode("update"), ckpt
         )
 
-    a = pd.DataFrame({"k": ["x", "y", "x"], "v": [1, 2, 3]})
-    b = pd.DataFrame({"k": ["x", "z"], "v": [10, 20]})
-    a.to_parquet(src / "a.parquet")
-    run_once()
-    b.to_parquet(src / "b.parquet")
-    run_once()
-
-    ledger = read_stream_ledger(ckpt)
-    assert ledger["batches"] == [0, 1]
-    by_file = {p.rsplit("/", 1)[-1]: b for p, b in ledger["files"].items()}
-    assert by_file == {"a.parquet": 0, "b.parquet": 1}
-
-    def state_at(**opts):
+    def state_at(ckpt, **opts):
         r = spark.read.format("statestore")
         for k, v in opts.items():
             r = r.option(k, v)
@@ -521,8 +515,67 @@ def test_restarted_stream_ledger_and_state_stay_consistent(spark, tmp_path):
             for row in r.load(ckpt).collect()
         }
 
-    assert state_at() == {"x": (3, 14), "y": (1, 2), "z": (1, 20)}
-    assert state_at(batchId=0) == {"x": (2, 4), "y": (1, 2)}
+    a = pd.DataFrame({"k": ["x", "y", "x"], "v": [1, 2, 3]})
+    b = pd.DataFrame({"k": ["x", "z"], "v": [10, 20]})
+    for case, phase_a in (("engine", spark), ("filecontext", spark_default_manager)):
+        src = tmp_path / case / "src"
+        src.mkdir(parents=True)
+        ckpt = f"{tmp_path}/{case}/ckpt"
+        a.to_parquet(src / "a.parquet")
+        run_once(phase_a, src, ckpt)
+        b.to_parquet(src / "b.parquet")
+        run_once(spark, src, ckpt)
+
+        ledger = read_stream_ledger(ckpt)
+        assert ledger["batches"] == [0, 1], case
+        by_file = {p.rsplit("/", 1)[-1]: b for p, b in ledger["files"].items()}
+        assert by_file == {"a.parquet": 0, "b.parquet": 1}, case
+        assert state_at(ckpt) == {"x": (3, 14), "y": (1, 2), "z": (1, 20)}, case
+        assert state_at(ckpt, batchId=0) == {"x": (2, 4), "y": (1, 2)}, case
+
+
+def _checkpoint_manager(session, path):
+    """The manager Spark's streaming logs and state stores would build
+    for ``path`` under ``session``'s confs."""
+    jvm = session._jvm
+    return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(path)),
+        session._jsparkSession.sessionState().newHadoopConf(),
+    )
+
+
+def test_checkpoint_manager_is_filesystem_based_and_keeps_one_writer_guard(
+    spark, tmp_path
+):
+    """The engine session, and a vanilla session once tune_session has
+    run, checkpoint through FileSystemBasedCheckpointFileManager (no
+    forked stat per rename on a host without the native Hadoop
+    library). Under it, as under the default FileContext manager, an
+    atomic create onto an existing file fails on close and leaves the
+    file's bytes alone: the offset log's one-writer-per-batch guard."""
+    from py4j.protocol import Py4JJavaError
+
+    from direct_kafka_stream_spark.session import tune_session
+
+    vanilla = spark.newSession()
+    vanilla.conf.unset(_CHECKPOINT_MANAGER_CONF)
+    default = _checkpoint_manager(vanilla, tmp_path)
+    tune_session(vanilla)
+    managers = [default, _checkpoint_manager(vanilla, tmp_path), _checkpoint_manager(spark, tmp_path)]
+    assert [m.getClass().getSimpleName() for m in managers] == [
+        "FileContextBasedCheckpointFileManager",
+        "FileSystemBasedCheckpointFileManager",
+        "FileSystemBasedCheckpointFileManager",
+    ]
+
+    for i, mgr in enumerate(managers[:2]):
+        existing = tmp_path / str(i)
+        existing.write_bytes(b"v1\nfirst writer")
+        out = mgr.createAtomic(spark._jvm.org.apache.hadoop.fs.Path(str(existing)), False)
+        out.write(bytearray(b"v1\nsecond writer"))
+        with pytest.raises(Py4JJavaError, match="already exists"):
+            out.close()
+        assert existing.read_bytes() == b"v1\nfirst writer", mgr.getClass().getSimpleName()
 
 
 def test_offset_ledger_rejects_missing_source_entry(tmp_path):
